@@ -216,10 +216,7 @@ def main() -> None:
 
     tail = [n for n in names if n not in set(HEADLINE)]
     for i, name in enumerate(tail):
-        dt, steal = timed_run(name)
-        times[name] = dt
-        runs[name] = [dt]
-        steals[name] = [steal]
+        times[name], _ = timed_run(name)
         if (i + 1) % 25 == 0:
             deep_clean()
 

@@ -8,18 +8,30 @@ re-expresses that surface — and a large-scale training-data-pipeline extension
 layer (dedup, similarity search, text analysis, multimodal columns) — on Spark
 DataFrames and Structured Streaming.  Nothing is ported: Catalyst/Tungsten replace
 the reference's scheduler/network/state plumbing entirely.
+
+The exported names load lazily (PEP 562): importing the package itself must not
+import pyspark, because ``python -m mini_flink_spark.pyworker`` has to edit
+``sys.path`` before pyspark is first imported.
 """
 
-from mini_flink_spark.session import get_spark
-from mini_flink_spark.operators.environment import StreamExecutionEnvironment
-from mini_flink_spark.operators.stream import DataStream, KeyedStream, WindowedStream
+from importlib import import_module
 
-__all__ = [
-    "get_spark",
-    "StreamExecutionEnvironment",
-    "DataStream",
-    "KeyedStream",
-    "WindowedStream",
-]
+_EXPORTS = {
+    "get_spark": "mini_flink_spark.session",
+    "StreamExecutionEnvironment": "mini_flink_spark.operators.environment",
+    "DataStream": "mini_flink_spark.operators.stream",
+    "KeyedStream": "mini_flink_spark.operators.stream",
+    "WindowedStream": "mini_flink_spark.operators.stream",
+}
+
+__all__ = list(_EXPORTS)
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name in _EXPORTS:
+        value = getattr(import_module(_EXPORTS[name]), name)
+        globals()[name] = value
+        return value
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

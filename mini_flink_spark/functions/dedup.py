@@ -180,8 +180,8 @@ def minhash_sig_arrow(base, k: int = MINHASH_K):
     on the bench corpus and ~25× at the probe), gather + per-doc min via
     numpy. Same bytes hashed (shingles are ASCII by construction of
     normalize_text; utf-8 encode == Spark's binary cast), same
-    int(hexdigest[:14], 16) fold as portable_hash64_py. Docs with empty
-    shingle sets emit no row — exactly the explode semantics.
+    int(hexdigest[:14], 16) fold as portable_hash64_py. Docs with empty or
+    null shingle sets emit no row — exactly the explode semantics.
 
     Measured (2M-doc probe, forced SMJ): signature stage 63.8 s → see
     OPTIMIZATION_r12.md; sf0.1 graded query flat-to-faster."""
@@ -219,7 +219,7 @@ def minhash_sig_arrow(base, k: int = MINHASH_K):
             return h
 
         for pdf in batches:
-            lens = pdf["sh"].map(len).to_numpy()
+            lens = pdf["sh"].map(lambda a: 0 if a is None else len(a)).to_numpy()
             keep = lens > 0
             if not keep.any():
                 continue

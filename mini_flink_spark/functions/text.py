@@ -392,3 +392,66 @@ def registered_domain(host: Column) -> Column:
 
 def registered_domain_sql(host_expr: str) -> str:
     return f"regexp_extract({host_expr}, '([^.]+\\.[^.]+)$', 1)"
+
+
+# Gopher rule thresholds (Rae et al. 2021 §A1.1, adapted to this corpus) —
+# the single source of truth for the flags query, the curation-pipeline gate,
+# and every oracle rendering. Integer cross-multiplication form throughout so
+# no flag ever compares floats at a rule boundary.
+GOPHER_TOKENS_LO, GOPHER_TOKENS_HI = 10, 100000
+GOPHER_MWL_LO, GOPHER_MWL_HI = 3, 10  # mean word length bounds
+GOPHER_MIN_STOPWORDS = 2
+GOPHER_DISTINCT_NUM, GOPHER_DISTINCT_DEN = 10, 3  # 10*distinct > 3*tokens
+
+_SW_EN_SQL = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"])
+
+# metric SQL over a token-list column named t
+GOPHER_METRICS_SQL = {
+    "n_tokens": "len(t)::BIGINT",
+    "n_chars": "list_sum(list_transform(t, w -> length(w)))::BIGINT",
+    "sw_hits": f"len(list_filter(t, w -> list_contains([{_SW_EN_SQL}], w)))::BIGINT",
+    "n_distinct": "len(list_distinct(t))::BIGINT",
+}
+
+
+def gopher_flag_sqls(
+    nt: str = "n_tokens",
+    nc: str = "n_chars",
+    sw: str = "sw_hits",
+    nd: str = "n_distinct",
+) -> dict[str, str]:
+    return {
+        "flag_word_count": f"({nt} BETWEEN {GOPHER_TOKENS_LO} AND {GOPHER_TOKENS_HI})",
+        "flag_mean_word_len": f"({nc} BETWEEN {GOPHER_MWL_LO} * {nt} AND {GOPHER_MWL_HI} * {nt})",
+        "flag_stopwords": f"({sw} >= {GOPHER_MIN_STOPWORDS})",
+        "flag_distinct": f"({GOPHER_DISTINCT_NUM} * {nd} > {GOPHER_DISTINCT_DEN} * {nt})",
+    }
+
+
+def gopher_pass_sql(**kw: str) -> str:
+    return " AND ".join(gopher_flag_sqls(**kw).values())
+
+
+def gopher_metrics(t) -> dict:
+    """Token-array Column -> the four rule-metric Columns."""
+    sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS["en"]])
+    return {
+        "n_tokens": F.array_size(t).cast("bigint"),
+        "n_chars": F.aggregate(
+            t, F.lit(0).cast("bigint"), lambda a, w: a + F.length(w)
+        ),
+        "sw_hits": F.size(F.filter(t, lambda w: F.array_contains(sw, w))).cast(
+            "bigint"
+        ),
+        "n_distinct": F.array_size(F.array_distinct(t)).cast("bigint"),
+    }
+
+
+def gopher_flags(nt, nc, sw, nd) -> tuple:
+    """Metric Columns -> the four rule flags (same order as gopher_flag_sqls)."""
+    return (
+        nt.between(GOPHER_TOKENS_LO, GOPHER_TOKENS_HI),
+        nc.between(GOPHER_MWL_LO * nt, GOPHER_MWL_HI * nt),
+        sw >= GOPHER_MIN_STOPWORDS,
+        GOPHER_DISTINCT_NUM * nd > GOPHER_DISTINCT_DEN * nt,
+    )

@@ -22,15 +22,12 @@ Spark renderings (SURVEY.md §4 'honest list' item 2):
    HeapKeyedStateBackend ValueState (HeapValueState.java:34,72,83) but
    fault-tolerant.
 
-Spark 4's transformWithStateInPandas (StatefulProcessor + named ValueState —
-an even closer ValueState analogue) was evaluated and is NOT used: its driver
-worker imports google.protobuf, which this container lacks (verified: the
-query crashes in StateMessage_pb2 at pre-init; re-verified rounds 3-11 —
-`import google.protobuf` still raises ModuleNotFoundError, and the install
-ban rules out adding it, so the blocker stands; vendoring a protobuf
-runtime was considered and rejected — TWS needs real wire-format
-(de)serialization against Spark's state server, not an import shim).
-applyInPandasWithState has no such dependency and covers the same
+Spark 4's transformWithStateInPandas (StatefulProcessor + named ValueState, an
+even closer ValueState analogue) is not used: its Python worker imports
+google.protobuf, which this package does not depend on (without it the query
+crashes in StateMessage_pb2 at pre-init), and it needs real protobuf wire-format
+(de)serialization against Spark's state server, so an import shim cannot stand
+in. applyInPandasWithState has no such dependency and covers the same
 semantics; swap in TWS where protobuf is available.
 """
 

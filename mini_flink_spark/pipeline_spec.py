@@ -32,11 +32,9 @@ def _stage_gopher_gate(df: DataFrame) -> DataFrame:
     """Rule gate on (doc_id, text, lang) — scan-side integer arithmetic.
     The four flags evaluate over ONE tokens projection (each flag expression
     would otherwise embed its own copy of the tokenizer chain)."""
-    from mini_flink_spark.queries_ext import gopher_flags, gopher_metrics
-
     toks = df.select("*", T.tokens("text").alias("__gate_t"))
-    mx = gopher_metrics(F.col("__gate_t"))
-    f1, f2, f3, f4 = gopher_flags(
+    mx = T.gopher_metrics(F.col("__gate_t"))
+    f1, f2, f3, f4 = T.gopher_flags(
         mx["n_tokens"], mx["n_chars"], mx["sw_hits"], mx["n_distinct"]
     )
     return toks.filter(f1 & f2 & f3 & f4).drop("__gate_t")

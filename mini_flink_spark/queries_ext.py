@@ -22,6 +22,13 @@ from mini_flink_spark.functions import dedup as D
 from mini_flink_spark.functions import sketches as K
 from mini_flink_spark.functions import similarity as S
 from mini_flink_spark.functions import text as T
+from mini_flink_spark.functions.text import (
+    GOPHER_METRICS_SQL,
+    gopher_flag_sqls,
+    gopher_flags,
+    gopher_metrics,
+    gopher_pass_sql,
+)
 from mini_flink_spark.queries import _t, register
 
 
@@ -850,69 +857,6 @@ def q_dedup_span_removal(spark, sf_dir):
     reconstruction is one in-array filter per row."""
     docs = _t(spark, sf_dir, "documents")
     return D.remove_duplicate_spans(docs, "doc_id", "text", w=15)
-
-
-# Gopher rule thresholds (Rae et al. 2021 §A1.1, adapted to this corpus) —
-# the single source of truth for the flags query, the curation-pipeline gate,
-# and every oracle rendering. Integer cross-multiplication form throughout so
-# no flag ever compares floats at a rule boundary.
-GOPHER_TOKENS_LO, GOPHER_TOKENS_HI = 10, 100000
-GOPHER_MWL_LO, GOPHER_MWL_HI = 3, 10  # mean word length bounds
-GOPHER_MIN_STOPWORDS = 2
-GOPHER_DISTINCT_NUM, GOPHER_DISTINCT_DEN = 10, 3  # 10*distinct > 3*tokens
-
-_SW_EN_SQL = ", ".join(f"'{w}'" for w in T.LANG_STOPWORDS["en"])
-
-# metric SQL over a token-list column named t
-GOPHER_METRICS_SQL = {
-    "n_tokens": "len(t)::BIGINT",
-    "n_chars": "list_sum(list_transform(t, w -> length(w)))::BIGINT",
-    "sw_hits": f"len(list_filter(t, w -> list_contains([{_SW_EN_SQL}], w)))::BIGINT",
-    "n_distinct": "len(list_distinct(t))::BIGINT",
-}
-
-
-def gopher_flag_sqls(
-    nt: str = "n_tokens",
-    nc: str = "n_chars",
-    sw: str = "sw_hits",
-    nd: str = "n_distinct",
-) -> dict[str, str]:
-    return {
-        "flag_word_count": f"({nt} BETWEEN {GOPHER_TOKENS_LO} AND {GOPHER_TOKENS_HI})",
-        "flag_mean_word_len": f"({nc} BETWEEN {GOPHER_MWL_LO} * {nt} AND {GOPHER_MWL_HI} * {nt})",
-        "flag_stopwords": f"({sw} >= {GOPHER_MIN_STOPWORDS})",
-        "flag_distinct": f"({GOPHER_DISTINCT_NUM} * {nd} > {GOPHER_DISTINCT_DEN} * {nt})",
-    }
-
-
-def gopher_pass_sql(**kw: str) -> str:
-    return " AND ".join(gopher_flag_sqls(**kw).values())
-
-
-def gopher_metrics(t) -> dict:
-    """Token-array Column -> the four rule-metric Columns."""
-    sw = F.array(*[F.lit(w) for w in T.LANG_STOPWORDS["en"]])
-    return {
-        "n_tokens": F.array_size(t).cast("bigint"),
-        "n_chars": F.aggregate(
-            t, F.lit(0).cast("bigint"), lambda a, w: a + F.length(w)
-        ),
-        "sw_hits": F.size(F.filter(t, lambda w: F.array_contains(sw, w))).cast(
-            "bigint"
-        ),
-        "n_distinct": F.array_size(F.array_distinct(t)).cast("bigint"),
-    }
-
-
-def gopher_flags(nt, nc, sw, nd) -> tuple:
-    """Metric Columns -> the four rule flags (same order as gopher_flag_sqls)."""
-    return (
-        nt.between(GOPHER_TOKENS_LO, GOPHER_TOKENS_HI),
-        nc.between(GOPHER_MWL_LO * nt, GOPHER_MWL_HI * nt),
-        sw >= GOPHER_MIN_STOPWORDS,
-        GOPHER_DISTINCT_NUM * nd > GOPHER_DISTINCT_DEN * nt,
-    )
 
 
 _GF = gopher_flag_sqls()
@@ -2723,10 +2667,9 @@ def q_multimodal_phash_neardup(spark, sf_dir):
 
 @register(
     "streaming_wordcount",
-    """
+    f"""
     SELECT tok AS word, count(*) AS count FROM (
-      SELECT unnest(string_split(trim(regexp_replace(regexp_replace(
-          lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ')) AS tok
+      SELECT unnest(string_split({T.normalize_text_sql('text')}, ' ')) AS tok
       FROM documents
     ) GROUP BY tok
     """,

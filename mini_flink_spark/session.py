@@ -10,10 +10,29 @@ shuffle-partition count sized to the substrate rather than Spark's legacy 200.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# The directory holding the package, so Python workers can import it (and
+# start from its daemon module) whatever the driver's working directory.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_pythonpath(caller: str | None = None) -> str | None:
+    """``spark.executorEnv.PYTHONPATH`` for Python workers: PACKAGE_PARENT
+    ahead of the caller's entries. Run from a checkout, that puts the
+    repository root on the workers' path on purpose. An installed package
+    lives in site-packages, which workers already search; that directory is
+    left out, because PYTHONPATH entries go ahead of the stdlib."""
+    site_dirs = [*site.getsitepackages(), site.getusersitepackages()]
+    installed = os.path.realpath(PACKAGE_PARENT) in {os.path.realpath(d) for d in site_dirs}
+    entries = [] if installed else [PACKAGE_PARENT]
+    if caller:
+        entries.append(caller)
+    return os.pathsep.join(entries) or None
 
 
 def get_spark(
@@ -70,8 +89,17 @@ def get_spark(
         # on the JVM heap, which is the difference between running and OOM.
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+        # Workers drop Spark's zip archives from sys.path before importing
+        # pyspark: with them on it, every task's importlib.invalidate_caches()
+        # re-reads ~6.7k archive entries on CPython <= 3.12, a few hundred ms
+        # per task (mini_flink_spark/pyworker.py).
+        .config("spark.python.daemon.module", "mini_flink_spark.pyworker")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    pythonpath = worker_pythonpath(conf.get("spark.executorEnv.PYTHONPATH"))
+    if pythonpath:
+        conf["spark.executorEnv.PYTHONPATH"] = pythonpath
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

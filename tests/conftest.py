@@ -16,6 +16,20 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def no_streaming_query_outlives_its_test():
+    yield
+    from pyspark.sql import SparkSession
+
+    session = SparkSession.getActiveSession()
+    if session is None:
+        return
+    active = session.streams.active
+    for q in active:
+        q.stop()
+    assert not active, f"streaming queries left running: {[q.name or q.id for q in active]}"
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -221,7 +221,8 @@ def test_add_sink_foreach_batch(spark, tmp_path):
         seen.append((batch_id, sorted(r.v for r in batch_df.collect())))
 
     q = stream.add_sink(sink)
-    q.awaitTermination(120)
+    q.processAllAvailable()
+    q.stop()
     got = sorted(v for _, vs in seen for v in vs)
     assert got == list(range(10))
 

@@ -169,3 +169,18 @@ def test_minhash_sig_arrow_bit_identical(spark, sf_dir):
     assert 900004 in arrow  # 4 tokens -> 2 shingles
     for i, s in jvm.items():
         assert list(s) == list(arrow[i]), i
+
+
+def test_minhash_sig_arrow_null_shingles_are_empty(spark):
+    """A null shingle array is an empty shingle set on the Arrow path: the
+    doc emits no row and the task does not fail, as with explode."""
+    from mini_flink_spark.functions.dedup import minhash_sig_arrow, minhash_sig_from_shingled
+
+    base = spark.createDataFrame(
+        [(1, None), (2, []), (3, ["a b c", "b c d"]), (4, None)],
+        "id long, sh array<string>",
+    )
+    arrow = {r.id: list(r.sig) for r in minhash_sig_arrow(base, 16).collect()}
+    jvm = {r.id: list(r.sig) for r in minhash_sig_from_shingled(base, ["id"], 16).collect()}
+    assert set(arrow) == {3}
+    assert arrow == jvm
